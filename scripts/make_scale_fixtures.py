@@ -163,8 +163,8 @@ for scale in SCALES:
         for t in ["region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "events"]:
             shutil.copyfile(f"{SRC}/{t}.parquet", f"{out}/{t}.parquet")
-        nd = con.execute(f"SELECT count(*) FROM '{out}/documents.parquet'").fetchone()[0]
-        nv = con.execute(f"SELECT count(*) FROM '{out}/embeddings.parquet'").fetchone()[0]
+        nd = con.execute(f"SELECT count(*) FROM '{out}/documents.parquet/*.parquet'").fetchone()[0]
+        nv = con.execute(f"SELECT count(*) FROM '{out}/embeddings.parquet/*.parquet'").fetchone()[0]
         print(f"x{scale} (light, bands={BANDS}): {nd} docs ({n_docs} base), "
               f"{nv} vecs ({n_vecs} base) -> {out}")
         continue
@@ -196,6 +196,6 @@ for scale in SCALES:
         split_parquet(f"{out}/{t}.parquet")
     for t in ["region", "nation"]:
         shutil.copyfile(f"{SRC}/{t}.parquet", f"{out}/{t}.parquet")
-    nd = con.execute(f"SELECT count(*) FROM '{out}/documents.parquet'").fetchone()[0]
-    nv = con.execute(f"SELECT count(*) FROM '{out}/embeddings.parquet'").fetchone()[0]
+    nd = con.execute(f"SELECT count(*) FROM '{out}/documents.parquet/*.parquet'").fetchone()[0]
+    nv = con.execute(f"SELECT count(*) FROM '{out}/embeddings.parquet/*.parquet'").fetchone()[0]
     print(f"x{scale}: {nd} docs ({n_docs} base), {nv} vecs ({n_vecs} base) -> {out}")

@@ -155,14 +155,7 @@ object Verify {
       s"written, ${failures.size} failed, ${missing.size} missing, " +
       f"wall $wallS%.1f s" +
       (if (missing.nonEmpty) s" — MISSING: ${missing.mkString(", ")}" else ""))
-    functions.Dedup.releaseCaches(spark)
-    functions.Similarity.releaseCaches(spark)
-    functions.TextQueries.releaseCaches(spark)
-    operators.Multimodal.releaseCaches(spark)
-    operators.SignatureStore.releaseCaches(spark)
-    operators.PipelineOps.releaseCaches(spark)
-    operators.CurationAudits.releaseCaches(spark)
-    functions.Embeddings.releaseCaches(spark)
+    PersistTracker.releaseAll(spark)
     spark.stop()
     // exit 0 even on failures: the sentinel parquet makes each failure a
     // visible per-query mismatch in the driver's compare, which is the

@@ -956,41 +956,25 @@ object Dedup {
     labels
   }
 
-  /** Cluster labels are cached per (sessionUUID, dataset): q72/q76 and
-    * repeated invocations reuse one persisted result instead of leaking a
-    * new cache entry per call (round-3 advisor finding). Keyed on the
-    * session UUID (identityHashCode can collide across sessions) and
-    * built under a lock so concurrent first calls can't both run
-    * connectedComponents and orphan the loser's persisted result. */
-  private val labelsCache =
-    scala.collection.mutable.Map.empty[(String, String), DataFrame]
-
   /** Unpersist this session's cached cluster labels AND tracked persisted
     * relations (shared shingles, q99's filtered shingles, q120's grams)
     * — test/app teardown, or between corpus versions in a long-lived
     * session. */
-  def releaseCaches(s: SparkSession): Unit = {
-    labelsCache.synchronized {
-      val id = sessionKey(s)
-      labelsCache.filterInPlace { case ((sid, _), df) =>
-        if (sid == id) { df.unpersist(); false } else true
-      }
-    }
+  def releaseCaches(s: SparkSession): Unit =
     graft.PersistTracker.release("dedup", s)
-  }
 
   /** Cached [[connectedComponents]] over an arbitrary edge builder,
-    * keyed by (session, key). The lock spans the build: clustering is a
-    * multi-job driver loop, so serializing duplicate first calls is
-    * strictly cheaper than letting both run and orphaning the loser's
-    * persisted result. Also used by Similarity's embedding-space dedup
-    * (key-prefixed so shingle and embedding graphs never collide). */
+    * memoized per (session, key): q72/q76 and repeated invocations reuse
+    * one persisted result instead of leaking a new cache entry per call
+    * (round-3 advisor finding). Concurrent first calls build once —
+    * clustering is a multi-job driver loop, so serializing duplicate
+    * first calls is strictly cheaper than letting both run and
+    * orphaning the loser's persisted result. Also used by Similarity's
+    * embedding-space dedup (key-prefixed so shingle and embedding
+    * graphs never collide). */
   private[graft] def cachedComponents(s: SparkSession, key: String)
       (pairs: => DataFrame): DataFrame =
-    labelsCache.synchronized {
-      labelsCache.getOrElseUpdate((sessionKey(s), key),
-        connectedComponents(s, pairs))
-    }
+    graft.PersistTracker.memo("dedup", s, key)(connectedComponents(s, pairs))
 
   /** Connected-component labels over the verified near-dup pair graph
     * (jaccard ≥ 0.8): [[connectedComponents]] over q27's verified pairs,

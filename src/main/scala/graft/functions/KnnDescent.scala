@@ -111,28 +111,14 @@ object KnnDescent {
     graft.plans.TopKPerGroup.topK(scored, Seq("src"),
       Seq("cos" -> false, "nbr" -> true), K)
 
-  private val graphCache = scala.collection.mutable.Map
-    .empty[(String, String), DataFrame]
-  private val radiusCache = scala.collection.mutable.Map
-    .empty[(String, String), Int]
-  private val recallCache = scala.collection.mutable.Map
-    .empty[(String, String), Seq[(String, Long)]]
-
-  def releaseCaches(s: SparkSession): Unit = {
-    graphCache.synchronized {
-      val id = sessionKey(s)
-      graphCache.filterInPlace { case ((sid, _), _) => sid != id }
-    }
-    radiusCache.synchronized {
-      val id = sessionKey(s)
-      radiusCache.filterInPlace { case ((sid, _), _) => sid != id }
-    }
-    recallCache.synchronized {
-      val id = sessionKey(s)
-      recallCache.filterInPlace { case ((sid, _), _) => sid != id }
-    }
+  def releaseCaches(s: SparkSession): Unit =
     graft.PersistTracker.release("knnd", s)
-  }
+
+  /** One session's build of one corpus's graph: the graph [[buildAuto]]
+    * shipped, the probe radius its recall dial chose, and the recall it
+    * measured per build leg. */
+  private final case class Built(graph: DataFrame, radius: Int,
+      recallMicro: Seq[(String, Long)])
 
   /** The recall the build MEASURED for each graph it considered, in
     * exact micro-units of recall@3 (1e6·hits/exact_edges — the same
@@ -145,12 +131,8 @@ object KnnDescent {
     * is the recall of the graph [[graph]] returned. Forces the build
     * like [[autoRadius]]. */
   private[graft] def measuredRecallMicro(s: SparkSession, emb: DataFrame,
-      cacheKey: String): Seq[(String, Long)] = {
-    graph(s, emb, cacheKey)
-    recallCache.synchronized {
-      recallCache.getOrElse((sessionKey(s), cacheKey), Seq.empty)
-    }
-  }
+      cacheKey: String): Seq[(String, Long)] =
+    built(s, emb, cacheKey).recallMicro
 
   /** THE RECALL POLICY (round-14 judge task #2; recall-targeted since
     * round 16 — round-15 verdict #3): the probe radius the build CHOSE
@@ -166,13 +148,11 @@ object KnnDescent {
     * the radius IS a property of the measured build, no longer a
     * pre-build proxy. */
   private[graft] def autoRadius(s: SparkSession, emb: DataFrame,
-      cacheKey: String): Int = {
-    graph(s, emb, cacheKey)
-    radiusCache.synchronized { radiusCache((sessionKey(s), cacheKey)) }
-  }
+      cacheKey: String): Int =
+    built(s, emb, cacheKey).radius
 
   /** Radius-1 build + measured-recall escalation — see [[autoRadius]].
-    * Records its decision in [[radiusCache]]. The radius-1 graph it
+    * Records its decision in the [[Built]] record. The radius-1 graph it
     * measures is built through the SAME [[stages]] path the session
     * would use, so on the no-escalation branch nothing is thrown away;
     * on escalation (round-16 verdict task #2) the radius-1 graph is not
@@ -190,7 +170,7 @@ object KnnDescent {
     * is materialized — buildAuto leaves exactly ONE persisted relation
     * behind. */
   private def buildAuto(s: SparkSession, emb: DataFrame,
-      cacheKey: String): DataFrame = {
+      cacheKey: String): Built = {
     val r1Stages = stages(s, emb, cacheKey, probeRadius = 1)
     val g1 = r1Stages.last
     val n = Similarity.corpusCount(emb, cacheKey)
@@ -229,9 +209,6 @@ object KnnDescent {
     val rec1 = recallMicro(g1)
     val legs = scala.collection.mutable.ArrayBuffer("r1" -> rec1)
     val r = if (misses(rec1)) 2 else 1
-    radiusCache.synchronized {
-      radiusCache((sessionKey(s), cacheKey)) = r; ()
-    }
     // the fused audit above materialized every radius-1 stage, so the
     // intermediates are dead weight on both branches; the audit
     // relation stays alive until the LAST measurement below (when the
@@ -274,10 +251,7 @@ object KnnDescent {
         }
       }
     graft.PersistTracker.drop("knnd", exact)
-    recallCache.synchronized {
-      recallCache((sessionKey(s), cacheKey)) = legs.toSeq; ()
-    }
-    out
+    Built(out, r, legs.toSeq)
   }
 
   /** The NN-descent graph for a corpus, cached per (session, dataset)
@@ -296,22 +270,16 @@ object KnnDescent {
     * against the dead entry) and the graph rebuilds from scratch. */
   private[graft] def graph(s: SparkSession, emb: DataFrame,
       cacheKey: String): DataFrame =
-    graphCache.synchronized {
-      val key = (sessionKey(s), cacheKey)
-      graphCache.get(key) match {
-        case Some(g) if org.apache.spark.sql.graftbridge.GraftBridge
-            .cachedAndMaterialized(g) => g
-        case hit =>
-          if (hit.isDefined) {
-            System.err.println(s"[knnd] cached graph for $cacheKey is no " +
-              "longer materialized — releasing knnd caches and rebuilding")
-            releaseCaches(s)
-          }
-          val g = buildAuto(s, emb, cacheKey)
-          graphCache(key) = g
-          g
-      }
-    }
+    built(s, emb, cacheKey).graph
+
+  private def built(s: SparkSession, emb: DataFrame, cacheKey: String): Built =
+    graft.PersistTracker.memoValid("knnd", s, cacheKey, (b: Built) => {
+      val live = org.apache.spark.sql.graftbridge.GraftBridge
+        .cachedAndMaterialized(b.graph)
+      if (!live) System.err.println(s"[knnd] cached graph for $cacheKey is " +
+        "no longer materialized — releasing knnd caches and rebuilding")
+      live
+    })(buildAuto(s, emb, cacheKey))
 
   /** q248's delta rule: a FIXED ~50-vector delta at any corpus size
     * (vec_id % stride = 7 % stride, stride = n/50) — fixed-absolute
@@ -359,8 +327,7 @@ object KnnDescent {
     * re-descending the whole corpus. */
   private[graft] def admitDelta(s: SparkSession, baseEmb: DataFrame,
       deltaEmb: DataFrame, cacheKey: String): DataFrame = {
-    val gB = graph(s, baseEmb, cacheKey)
-    val r = radiusCache.synchronized { radiusCache((sessionKey(s), cacheKey)) }
+    val Built(gB, r, _) = built(s, baseEmb, cacheKey)
     val nBase = Similarity.corpusCount(baseEmb, cacheKey)
     val planes = Similarity.lshPool.take(Similarity.lshNPlanes(nBase))
     val all = baseEmb.union(deltaEmb)

@@ -1115,29 +1115,19 @@ object PipelineOps {
   /** q183's memoized exact-NDV audit leg, per (session, dataset#table)
     * — see the q183 query comment (round-17 verdict #5). Tracked under
     * the module's PersistTracker namespace so [[releaseCaches]] (and
-    * Bench's between-query sweep) releases the blocks; the handle map
-    * is cleared alongside so a later call rebuilds instead of serving
-    * a stripped-blocks handle (the r16 q240 lesson). */
-  private val exactProfileCache = scala.collection.mutable.Map
-    .empty[(String, String), DataFrame]
-
+    * Bench's between-query sweep) releases the blocks and the memo
+    * together, so a later call rebuilds instead of serving a
+    * stripped-blocks handle (the r16 q240 lesson). */
   private def memoExactProfile(s: SparkSession, key: String,
       build: => DataFrame): DataFrame =
-    exactProfileCache.synchronized {
-      exactProfileCache.getOrElseUpdate((graft.Tables.sessionKey(s), key),
-        graft.PersistTracker.tracked("pipeline", build))
-    }
+    graft.PersistTracker.memo("pipeline", s, key)(
+      graft.PersistTracker.tracked("pipeline", build))
 
   /** Unpersist this session's tracked relations (q136's verdict cache;
     * q183's exact-leg memo; test/app teardown) — the shared module
     * contract. */
-  def releaseCaches(s: SparkSession): Unit = {
-    exactProfileCache.synchronized {
-      val id = graft.Tables.sessionKey(s)
-      exactProfileCache.filterInPlace { case ((sid, _), _) => sid != id }
-    }
+  def releaseCaches(s: SparkSession): Unit =
     graft.PersistTracker.release("pipeline", s)
-  }
 
   /** q162's replay text, shared verbatim with the q163 gate's PSI leg
     * (the q132 compose-the-sibling's-oracle discipline). */

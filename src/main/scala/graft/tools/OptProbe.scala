@@ -43,16 +43,7 @@ object OptProbe {
     }.distinct
 
     def releaseAll(): Unit = {
-      graft.functions.Dedup.releaseCaches(spark)
-      graft.functions.Similarity.releaseCaches(spark)
-      graft.functions.KnnDescent.releaseCaches(spark)
-      graft.functions.TextQueries.releaseCaches(spark)
-      graft.operators.Multimodal.releaseCaches(spark)
-      graft.operators.SignatureStore.releaseCaches(spark)
-      graft.operators.PipelineOps.releaseCaches(spark)
-      graft.operators.CurationPipeline.releaseCaches(spark)
-      graft.operators.CurationAudits.releaseCaches(spark)
-      graft.functions.Embeddings.releaseCaches(spark)
+      graft.PersistTracker.releaseAll(spark)
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       System.gc()

@@ -59,8 +59,7 @@ object ProductionProfile {
       s""""production":${js(prod)},"production_keep_rate":${rate(prod)},""" +
       s""""prod_top_bigram_max":${graft.Thresholds.Production.RepTopBigramMax},""" +
       s""""prod_dup_5gram_max":${graft.Thresholds.Production.RepDup5gramMax}}""")
-    graft.operators.CurationPipeline.releaseCaches(spark)
-    graft.functions.Dedup.releaseCaches(spark)
+    graft.PersistTracker.releaseAll(spark)
     spark.stop()
   }
 }

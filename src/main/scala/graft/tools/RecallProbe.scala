@@ -141,8 +141,7 @@ object RecallProbe {
       s""""recall_nnd_auto_at3":${r4(hitAuto.toDouble / nExact3)},""" +
       s""""nnd_auto_secs":${r4(autoSecs)},"n_edges_nnd_auto":$nEdgesAuto,""" +
       s""""nnd_auto_recall_micro":$autoLegsJson}""")
-    graft.functions.KnnDescent.releaseCaches(spark)
-    graft.functions.Similarity.releaseCaches(spark)
+    graft.PersistTracker.releaseAll(spark)
     spark.stop()
   }
 }

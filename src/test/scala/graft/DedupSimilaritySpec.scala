@@ -1136,6 +1136,58 @@ class DedupSimilaritySpec extends TestSpark {
     graft.functions.KnnDescent.releaseCaches(spark)
   }
 
+  test("releaseAll drops every session memo, destroys its broadcasts and unpersists its tracked set") {
+    val emb = Tables.embeddings(spark, sf0001)
+    graft.functions.KnnDescent.graph(spark, emb, sf0001)
+    Dedup.nearDupLabels(spark, sf0001)
+    Similarity.queries("q31_ann_ivf")(spark, sf0001).collect()
+    operators.CurationPipeline.provenance(spark, sf0001)
+    operators.CurationPipeline.benchGramSet(spark, sf0001)
+    val (memos, tracked) = PersistTracker.sessionState(spark)
+    for (k <- Seq("knnd" -> sf0001, "dedup" -> sf0001,
+        "similarity" -> sf0001, "curation" -> ("prov:" + sf0001),
+        "curation" -> ("gram:" + sf0001)))
+      assert(memos.contains(k), s"no memo entry for $k")
+    val broadcasts = memos.values.collect {
+      case b: org.apache.spark.broadcast.Broadcast[_] => b }
+    val memoDfs = memos.values.collect {
+      case df: org.apache.spark.sql.Dataset[_] => df }
+    assert(broadcasts.size >= 2 && memoDfs.nonEmpty && tracked.nonEmpty)
+    PersistTracker.releaseAll(spark)
+    val (memosAfter, trackedAfter) = PersistTracker.sessionState(spark)
+    assert(memosAfter.isEmpty && trackedAfter.isEmpty)
+    broadcasts.foreach(b => intercept[org.apache.spark.SparkException](b.value))
+    (memoDfs ++ tracked).foreach(df => assert(
+      df.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
+  }
+
+  test("a memo builds once under racing first calls, and a failed build caches nothing") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val start = new java.util.concurrent.CountDownLatch(1)
+    def build(): Int = { builds.incrementAndGet(); Thread.sleep(200); 42 }
+    val racers = (1 to 2).map { _ =>
+      val f = new java.util.concurrent.FutureTask[Int](() => {
+        start.await()
+        PersistTracker.memo("memospec", spark, "race")(build())
+      })
+      new Thread(f).start()
+      f
+    }
+    start.countDown()
+    assert(racers.map(_.get) == Seq(42, 42))
+    assert(builds.get == 1)
+
+    intercept[IllegalStateException] {
+      PersistTracker.memo[Int]("memospec", spark, "fails")(
+        throw new IllegalStateException("build failed"))
+    }
+    assert(!PersistTracker.sessionState(spark)._1.contains("memospec" -> "fails"))
+    assert(PersistTracker.memo("memospec", spark, "fails")(build()) == 42)
+    assert(builds.get == 2)
+    PersistTracker.release("memospec", spark)
+    assert(PersistTracker.sessionState(spark)._1.keys.forall(_._1 != "memospec"))
+  }
+
   test("q240 sampled audit: recounts from q231's edges vs in-JVM brute-force exact on the sample") {
     val row = graft.functions.KnnDescent.queries("q240_sampled_knn_audit")(
       spark, sf0001).head()
